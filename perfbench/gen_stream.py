@@ -4,13 +4,18 @@ Run as its own process (``python3 gen_stream.py CONFIG.json``).  It
 publishes parquet files into the input directory, each at the time the
 schedule fixes for it, whether or not the stream keeps up: each file is
 written under a hidden name and renamed into place, so the file source
-never sees a partial file.  Every event carries ``gen_ts``, the time its
-file was due, so latency is measured from when the event was due, not
-from when a stalled generator got round to it.
+never sees a partial file.  Every event carries ``gen_ts``, its file's
+due offset from the schedule start ``t0`` (stored as a timestamp that
+many microseconds after the Unix epoch), so latency is measured from
+when the event was due, not from when a stalled generator got round to
+it.  Because ``gen_ts`` does not depend on ``t0``, every file is encoded
+before the schedule starts; publishing one is a write and a rename.
+The generator then picks ``t0`` and reports it in a ready file, so its
+own start-up (imports, encoding) never makes a file late.
 
 The event content is a pure function of the seed and the schedule
 (:func:`make_files`); the benchmark process calls the same function to
-build the reference and the input digest.  Only ``gen_ts`` depends on
+build the reference and the input digest.  Nothing in a file depends on
 the wall clock.
 """
 
@@ -80,42 +85,62 @@ def user_names(user: np.ndarray) -> list:
     return [f"u{u:07d}" for u in user.tolist()]
 
 
-def publish(files: "list[dict]", out_dir: str, t0: float) -> list:
-    """Write each file at ``t0 + due_s``; return [j, due, published]."""
+def encode(f: dict) -> bytes:
+    """One file's parquet bytes."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    n = len(f["event_id"])
+    table = pa.table({
+        "event_id": pa.array(f["event_id"], pa.int64()),
+        "user": pa.array(user_names(f["user"]), pa.string()),
+        "value": pa.array(f["value"], pa.int64()),
+        "event_ts": pa.array(f["event_ts_us"], pa.timestamp("us")),
+        "gen_ts": pa.array(np.full(n, int(round(f["due_s"] * 1e6)), np.int64),
+                           pa.timestamp("us")),
+    })
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink)
+    return sink.getvalue().to_pybytes()
+
+
+def write_on_schedule(blobs: list, out_dir: str, t0: float) -> list:
+    """Write each encoded file ``(j, due_s, bytes)`` at ``t0 + due_s``;
+    return [j, due, published]."""
     log = []
-    for f in files:
-        due = t0 + f["due_s"]
+    for j, due_s, data in blobs:
+        due = t0 + due_s
         wait = due - time.time()
         if wait > 0:
             time.sleep(wait)
-        n = len(f["event_id"])
-        table = pa.table({
-            "event_id": pa.array(f["event_id"], pa.int64()),
-            "user": pa.array(user_names(f["user"]), pa.string()),
-            "value": pa.array(f["value"], pa.int64()),
-            "event_ts": pa.array(f["event_ts_us"], pa.timestamp("us")),
-            "gen_ts": pa.array(np.full(n, int(due * 1e6), np.int64), pa.timestamp("us")),
-        })
-        tmp = os.path.join(out_dir, f".part-{f['j']:06d}.parquet")
-        pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(out_dir, f"part-{f['j']:06d}.parquet"))
-        log.append([f["j"], due, time.time()])
+        tmp = os.path.join(out_dir, f".part-{j:06d}.parquet")
+        with open(tmp, "wb") as fh:
+            fh.write(data)
+        os.rename(tmp, os.path.join(out_dir, f"part-{j:06d}.parquet"))
+        log.append([j, due, time.time()])
     return log
+
+
+def publish(files: "list[dict]", out_dir: str, t0: float) -> list:
+    """Encode the files, then write each at ``t0 + due_s``."""
+    return write_on_schedule([(f["j"], f["due_s"], encode(f)) for f in files], out_dir, t0)
+
+
+def _dump(obj, path: str) -> None:
+    with open(path + ".tmp", "w") as fh:
+        json.dump(obj, fh)
+    os.rename(path + ".tmp", path)
 
 
 def main(path: str) -> None:
     with open(path) as fh:
         cfg = json.load(fh)
     files, _ = make_files(cfg)
-    # the parent publishes the first file itself and picks t0 once both
-    # queries have finished their first batch
-    log = publish([f for f in files if f["rung"] != "first"], cfg["in_dir"], float(cfg["t0"]))
-    with open(cfg["log_path"] + ".tmp", "w") as fh:
-        json.dump(log, fh)
-    os.rename(cfg["log_path"] + ".tmp", cfg["log_path"])
+    # the parent publishes the first file itself, before starting this process
+    blobs = [(f["j"], f["due_s"], encode(f)) for f in files if f["rung"] != "first"]
+    t0 = time.time() + float(cfg["lead_s"])
+    _dump({"t0": t0}, cfg["ready_path"])
+    _dump(write_on_schedule(blobs, cfg["in_dir"], t0), cfg["log_path"])
 
 
 if __name__ == "__main__":

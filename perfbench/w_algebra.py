@@ -224,7 +224,7 @@ def run(ctx) -> dict:
     span_marks = []
     deadline = None
     i = 0
-    while i < 4 or time.perf_counter() < deadline:  # the cold pass and at least 3 warm
+    while i < 3 or time.perf_counter() < deadline:  # the cold pass and at least 2 warm
         out_dir = os.path.join(ctx.work, f"out{i}")
         span_marks.append(len(ctx.tracer.spans))
         t = time.perf_counter()

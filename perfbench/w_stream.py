@@ -15,8 +15,11 @@ a fixed schedule through the rungs ``warm``, ``low``, ``high`` and
 ``over`` (workloads.json), after one ``first`` file that both queries
 finish before the clock starts.  Latency is computed after the run from
 the sink output (each window row carries the ``gen_ts`` of its newest
-event) and the mtime of each epoch's commit marker, so measuring it adds
-no work to a trigger.
+event: that event's due offset from the schedule start) and the mtime of
+each epoch's commit marker, so measuring it adds no work to a trigger.
+A run whose generator published a file later than ``gen_late_limit_s``
+after its due time counts one failed operation: its latencies would
+charge the generator's delay to the library.
 """
 
 from __future__ import annotations
@@ -169,6 +172,18 @@ def _wait(queries, n: int, deadline: float) -> None:
     raise TimeoutError(f"streams did not process {n} events in time")
 
 
+def _ready(path: str, gen, deadline: float) -> float:
+    """Wait for the generator's ready file; return the schedule start."""
+    while not os.path.exists(path):
+        if gen.poll() is not None:
+            raise RuntimeError(f"generator exited with {gen.returncode} before it was ready")
+        if time.time() > deadline:
+            raise TimeoutError("generator did not get ready in time")
+        time.sleep(0.02)
+    with open(path) as fh:
+        return float(json.load(fh)["t0"])
+
+
 def _stop(queries) -> None:
     """Stop each query between triggers where possible: a stop that
     interrupts a no-data batch's write only logs noise, but it is noise."""
@@ -217,13 +232,15 @@ def run(ctx) -> dict:
               time.time() + cfg["drain_timeout_s"])
         gen_cfg = {k: cfg[k] for k in ("events_per_file", "keys", "zipf_s", "ooo_share",
                                        "ooo_max_s", "watermark_s", "rungs", "seed")}
-        t0 = time.time() + 1.0
-        gen_cfg.update(t0=t0, in_dir=in_dir, log_path=os.path.join(ctx.work, "gen_log.json"))
+        gen_cfg.update(lead_s=0.2, in_dir=in_dir,
+                       ready_path=os.path.join(ctx.work, "gen_ready.json"),
+                       log_path=os.path.join(ctx.work, "gen_log.json"))
         cfg_path = os.path.join(ctx.work, "gen_cfg.json")
         with open(cfg_path, "w") as fh:
             json.dump(gen_cfg, fh)
         gen = subprocess.Popen([sys.executable, os.path.join(HERE, "gen_stream.py"), cfg_path],
                                env={**os.environ, "OMP_NUM_THREADS": "1"})
+        t0 = _ready(gen_cfg["ready_path"], gen, time.time() + 60)
         time.sleep(max(0.0, t0 + files[-1]["due_s"] - time.time()))
         _wait(queries, n_events, t0 + files[-1]["due_s"] + cfg["drain_timeout_s"])
         if gen.wait(timeout=30) != 0:
@@ -236,8 +253,8 @@ def run(ctx) -> dict:
             prog[name] = _progress(q)
         _stop(queries)
     with open(gen_cfg["log_path"]) as fh:
-        gen_log = first_log + json.load(fh)
-    return _evaluate(ctx, cfg, files, digest, gen_log, prog, outs)
+        gen_log = json.load(fh)
+    return _evaluate(ctx, cfg, files, digest, t0, first_log, gen_log, prog, outs)
 
 
 def baseline(ctx) -> dict:
@@ -264,9 +281,10 @@ def baseline(ctx) -> dict:
             "eps": n / (time.perf_counter() - t)}
 
 
-def _evaluate(ctx, cfg, files, digest, gen_log, prog, outs) -> dict:
-    due = {j: d for j, d, _ in gen_log}
+def _evaluate(ctx, cfg, files, digest, t0, first_log, gen_log, prog, outs) -> dict:
+    due = {j: d for j, d, _ in first_log + gen_log}
     late = [pub - d for _, d, pub in gen_log]
+    late_max = max(late)
     gaps = {r["name"]: cfg["events_per_file"] / r["rate"] for r in cfg["rungs"]}
     spans = {}  # measured rung -> [first due, last due + gap)
     for f in files:
@@ -286,37 +304,40 @@ def _evaluate(ctx, cfg, files, digest, gen_log, prog, outs) -> dict:
 
     # ---- latency: commit of the row's epoch minus the due time of its newest event
     rw = rows["window"]
-    gen_s = rw["last_gen_ts"].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
+    gen_s = t0 + rw["last_gen_ts"].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
     lat = rw["epoch"].map(commits["window"]).to_numpy() - gen_s
     lat_by = {name: lat[(gen_s >= a - 1e-6) & (gen_s < b - 1e-6)].tolist()
               for name, (a, b) in spans.items()}
 
-    # ---- backlog and throughput: an event counts as processed once both
-    # queries have committed the epoch that read it
+    # ---- backlog and throughput: an input file counts as processed once
+    # both queries have committed the epoch that read it
     size = {f["j"]: len(f["event_id"]) for f in files}
     logs = {name: _source_log(os.path.join(ctx.work, f"ck_{name}")) for name in outs}
-    done = {name: sorted((commits[name][b], sum(size[j] for j in js))
-                         for b, js in logs[name].items() if b in commits[name])
-            for name in outs}
+    read_in = {name: {j: bt for bt, js in logs[name].items() for j in js} for name in outs}
+    done_at = {j: max(commits[name].get(read_in[name].get(j), float("inf")) for name in outs)
+               for j in size}
+    commit_ts = sorted(t for t in done_at.values() if t < float("inf"))
 
     def processed_by(t):
-        return min(sum(n for e, n in ev if e <= t) for ev in done.values())
+        return sum(n for j, n in size.items() if done_at[j] <= t)
 
-    def due_by(t):
-        return sum(n for j, n in size.items() if due[j] <= t)
+    def backlog_at(t):
+        return sum(n for j, n in size.items() if due[j] <= t < done_at[j])
 
-    backlog = {name: (due_by(b) - processed_by(b)) - (due_by(a) - processed_by(a))
-               for name, (a, b) in spans.items()}
-    end = max(max(c.values()) for c in commits.values())
+    backlog = {name: backlog_at(b) for name, (a, b) in spans.items()}
+    # the last commit that finished input; a no-data batch after it moves no events
+    end = commit_ts[-1]
     over_a = spans["over"][0]
     max_eps = (processed_by(end) - processed_by(over_a)) / (end - over_a)
-    # sustained: the backlog grew by less than one capped trigger and p99 met the limit
-    cap_events = cfg["files_per_trigger"] * cfg["events_per_file"]
+    # sustained: the highest measured rung whose p99 met the limit (``over``
+    # is a burst, not a rate).  Whether a rung's backlog grew is not part of
+    # the rule: a rung spans one or two triggers, too few for a backlog test
+    # to tell a rung above the drain rate from trigger-to-trigger variation.
     sustained = 0.0
     for r in cfg["rungs"]:
-        if r["name"] in spans and backlog[r["name"]] <= cap_events \
-                and pct(lat_by[r["name"]], 99) <= cfg["lat_p99_limit_s"]:
+        if "share" in r and pct(lat_by[r["name"]], 99) <= cfg["lat_p99_limit_s"]:
             sustained = float(r["rate"])
+    gen_ok = late_max <= cfg["gen_late_limit_s"]
     low, high = lat_by["low"], lat_by["high"]
     metrics = {"wall_s": end - spans["low"][0], "lat_p50_s": pct(low, 50),
                "lat_p99_s": pct(low, 99), "eps": max_eps}
@@ -325,14 +346,16 @@ def _evaluate(ctx, cfg, files, digest, gen_log, prog, outs) -> dict:
         "latency_samples": {k: len(v) for k, v in lat_by.items()},
         "lat_low_p50_s": pct(low, 50), "lat_low_p99_s": pct(low, 99),
         "lat_high_p50_s": pct(high, 50), "lat_high_p99_s": pct(high, 99),
-        "sustained_eps": sustained, "max_eps": max_eps, "backlog_growth": backlog,
-        "gen_late_s_max": max(late), "check": {"window": msg_w, "fold": msg_f},
+        "sustained_eps": sustained, "max_eps": max_eps, "backlog_end_events": backlog,
+        "gen_late_s_max": late_max, "gen_on_schedule": gen_ok,
+        "check": {"window": msg_w, "fold": msg_f},
     }
     layers = {}
     if ctx.tracer.enabled:
         layers = _layers(ctx, prog, rows, logs, due, late, lat_by, sustained, backlog, outs)
-    return {"metrics": metrics, "attempted": len(want_win) + len(want_fold),
-            "failed": bad_w + bad_f, "detail": detail, "layers": layers}
+    # the schedule itself is one checked operation
+    return {"metrics": metrics, "attempted": len(want_win) + len(want_fold) + 1,
+            "failed": bad_w + bad_f + (0 if gen_ok else 1), "detail": detail, "layers": layers}
 
 
 def _layers(ctx, prog, rows, logs, due, late, lat_by, sustained, backlog, outs) -> dict:

@@ -12,9 +12,9 @@ through ``Sink.exactly_once_parquet``:
 
 The generator (``gen_stream.py``, a separate process) publishes files on
 a fixed schedule through the rungs ``warm``, ``low``, ``high`` and
-``over`` (workloads.json), after one ``first`` file that both queries
-finish before the clock starts.  Latency is computed after the run from
-the sink output (each window row carries the ``gen_ts`` of its newest
+``over`` (workloads.json), after the ``first_files`` files of rung
+``first``, which both queries finish before the clock starts.  Latency
+is computed after the run from the sink output (each window row carries the ``gen_ts`` of its newest
 event: that event's due offset from the schedule start) and the mtime of
 each epoch's commit marker, so measuring it adds no work to a trigger.
 A run whose generator published a file later than ``gen_late_limit_s``
@@ -148,16 +148,30 @@ def _start(ctx, in_dir, outs, cfg):
 
 
 def _source_log(ck_dir: str) -> dict:
-    """batchId -> file indexes it read, from the file source's own log
-    in the checkpoint (``v1`` header, one JSON entry per file)."""
-    out: dict = {}
+    """Query batchId -> file indexes it read.  The file source logs its
+    files (``sources/0``: ``v1`` header, one JSON entry per file) under
+    its own batch counter, which skips the query's no-data batches; the
+    query's offset log (``offsets/<batchId>``, the source offset on its
+    third line) says up to which source batch each query batch read."""
+    by_src: dict = {}
     for p in glob.glob(os.path.join(ck_dir, "sources", "0", "*")):
         with open(p) as fh:
             for line in fh:
                 if line.startswith("{"):
                     e = json.loads(line)
                     j = int(os.path.basename(e["path"]).split("-")[1].split(".")[0])
-                    out.setdefault(int(e["batchId"]), set()).add(j)
+                    by_src.setdefault(int(e["batchId"]), set()).add(j)
+    ends = {}
+    for p in glob.glob(os.path.join(ck_dir, "offsets", "*")):
+        if os.path.basename(p).isdigit():
+            with open(p) as fh:
+                ends[int(os.path.basename(p))] = json.loads(fh.read().splitlines()[2])["logOffset"]
+    out, prev = {}, -1
+    for b in sorted(ends):
+        js = set().union(*(by_src.get(k, set()) for k in range(prev + 1, ends[b] + 1)))
+        if js:
+            out[b] = js
+        prev = ends[b]
     return out
 
 
@@ -168,7 +182,7 @@ def _wait(queries, n: int, deadline: float) -> None:
                 raise RuntimeError(f"stream failed: {q.exception()}")
         if all(_processed(q) >= n for q in queries.values()):
             return
-        time.sleep(0.5)
+        time.sleep(0.1)
     raise TimeoutError(f"streams did not process {n} events in time")
 
 
@@ -201,7 +215,7 @@ def schedule(ctx) -> dict:
     cfg = dict(ctx.cfg, seed=ctx.seed)
     r0 = cfg["rungs"][0]
     first = {"name": "first", "rate": r0["rate"],
-             "seconds": cfg["events_per_file"] / r0["rate"]}
+             "seconds": cfg["first_files"] * cfg["events_per_file"] / r0["rate"]}
     cfg["rungs"] = [first] + [dict(r, seconds=r.get("seconds", r.get("share", 0) * ctx.seconds))
                               for r in cfg["rungs"]]
     return cfg
@@ -328,7 +342,21 @@ def _evaluate(ctx, cfg, files, digest, t0, first_log, gen_log, prog, outs) -> di
     # the last commit that finished input; a no-data batch after it moves no events
     end = commit_ts[-1]
     over_a = spans["over"][0]
-    max_eps = (processed_by(end) - processed_by(over_a)) / (end - over_a)
+    drain_eps = (processed_by(end) - processed_by(over_a)) / (end - over_a)
+    # max_eps: the median rate of the burst's full triggers (those that
+    # read the whole file cap and at least one burst file) over both
+    # queries.  A trigger that read fewer files, such as one that caught
+    # the burst while it was still being published or the one that read
+    # what was left, has a size that varies from run to run: left out.
+    cap = cfg["files_per_trigger"]
+    over_js = {f["j"] for f in files if f["rung"] == "over"}
+    full = [p["numInputRows"] / (p["durationMs"]["triggerExecution"] / 1000)
+            for name, ps in prog.items() for p in ps
+            if len(logs[name].get(p["batchId"], ())) == cap
+            and logs[name][p["batchId"]] & over_js]
+    if not full:
+        raise RuntimeError("no trigger of the burst read the whole file cap")
+    max_eps = float(np.median(full))
     # sustained: the highest measured rung whose p99 met the limit (``over``
     # is a burst, not a rate).  Whether a rung's backlog grew is not part of
     # the rule: a rung spans one or two triggers, too few for a backlog test
@@ -346,7 +374,8 @@ def _evaluate(ctx, cfg, files, digest, t0, first_log, gen_log, prog, outs) -> di
         "latency_samples": {k: len(v) for k, v in lat_by.items()},
         "lat_low_p50_s": pct(low, 50), "lat_low_p99_s": pct(low, 99),
         "lat_high_p50_s": pct(high, 50), "lat_high_p99_s": pct(high, 99),
-        "sustained_eps": sustained, "max_eps": max_eps, "backlog_end_events": backlog,
+        "sustained_eps": sustained, "max_eps": max_eps, "full_trigger_eps": full,
+        "burst_drain_eps": drain_eps, "backlog_end_events": backlog,
         "gen_late_s_max": late_max, "gen_on_schedule": gen_ok,
         "check": {"window": msg_w, "fold": msg_f},
     }

@@ -2649,18 +2649,7 @@ def purge_ann_tombstones(
             else 0
         )
         removed = int(n_before - n_after)
-
-        def _drop_dir(path: str) -> None:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {Sink._forget_bucket_table(spark, path)}"
-            )
-            shutil.rmtree(path, ignore_errors=True)
-
-        for e in epochs:
-            _drop_dir(f"{group_dir}/cells/data/epoch={e}")
-        for p in pathlib.Path(cdir).iterdir():
-            if p.name != new_dir:
-                _drop_dir(str(p))
+        Sink._purge_superseded(spark, group_dir, ["cells"], epochs, new_dir)
     for d in ts_files:  # applied — physically done, clear the batches
         shutil.rmtree(d, ignore_errors=True)
     return removed

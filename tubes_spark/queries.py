@@ -1570,14 +1570,14 @@ def dropwhile_prefix(spark, sf_dir):
 
 def streaming_resumable_fold(spark, sf_dir):
     """The reference's resumable fold (lfold, Tubes/Util.hs:158-181) on
-    the REAL streaming state store: per-user accumulator updated by
-    applyInPandasWithState across micro-batches, final state per key
-    recovered as the max-n update row.  Values are floored to integer
-    millis before folding so float addition is associative — the result
-    is byte-identical no matter how the stream is batched, which is
-    also what lets the fold take the VECTORIZED op='sum' fast path
-    (per-batch C reduce + scalar merge) instead of a per-row Python
-    loop, with the oracle hash-checking the equivalence."""
+    the REAL streaming state store: per-user accumulator updated across
+    micro-batches, final state per key recovered as the max-n update
+    row.  Values are floored to integer millis before folding so float
+    addition is associative — the result is byte-identical no matter
+    how the stream is batched, which is also what lets op='sum' run as
+    Spark's native streaming aggregate (JVM state, no Python worker)
+    instead of a per-key Python loop, with the oracle hash-checking the
+    equivalence."""
     import shutil
     import tempfile
     import uuid
@@ -5334,6 +5334,23 @@ def _trigram_tfidf_sim(spark, sf_dir):
     )
 
 
+_TERM_PARTS_MAX = 4096  # 1 TB of postings at 256 MB a partition
+
+
+def _term_partitions(df, cores: int) -> int:
+    """Postings partition count: one per core, or one per 256 MB of the
+    plan's size estimate, never above ``_TERM_PARTS_MAX``.  The estimate
+    can be unknown (``Long.MaxValue``) or a join-product overflow far
+    beyond it; neither is a size, so both fall back to the core count."""
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        est = 0
+    if est >= (1 << 63) - 1:
+        est = 0
+    return min(max(cores, est // (256 << 20)), _TERM_PARTS_MAX)
+
+
 def _build_trigram_tfidf_sim(spark, sf_dir):
     """Near-duplicate scoring via the INVERTED INDEX: docs as TF-IDF
     vectors over word 3-gram shingles, pairwise cosine computed by
@@ -5379,21 +5396,14 @@ def _build_trigram_tfidf_sim(spark, sf_dir):
     # size, so AQE would coalesce it to ~3 tasks; an explicit count
     # keeps the decimal dot-products parallel.  r14 (VERDICT r13 #3,
     # guide §2.2): the count is now scale-adaptive — one partition per
-    # core with a bytes-per-partition ceiling from the checkpointed
-    # postings' plan stats — instead of the old fixed 64, which was
-    # 2x the core count at gate SF (A/B at sf0.1/local[32]: cold build
-    # 3.3-3.8 s @ 64 -> 2.4-2.7 s @ 32; the 64-task stages spent 4x
+    # core or per 256 MB of the checkpointed postings' plan stats, up to
+    # a fixed ceiling (_term_partitions) — instead of the old fixed 64,
+    # which was 2x the core count at gate SF (A/B at sf0.1/local[32]:
+    # cold build 3.3-3.8 s @ 64 -> 2.4-2.7 s @ 32; the 64-task stages spent 4x
     # their CPU in scheduling/wait) and would be far too FEW partitions
     # for a 100 TB postings table.
-    try:
-        _est = int(w._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        _est = 0
     w = w.repartition(
-        max(
-            d.sparkSession.sparkContext.defaultParallelism,
-            _est // (256 << 20),
-        ),
+        _term_partitions(w, d.sparkSession.sparkContext.defaultParallelism),
         "term",
     )
     norms = w.groupBy("doc_id").agg(

@@ -393,6 +393,34 @@ class Sink:
         return tbl
 
     @staticmethod
+    def _drop_dir(spark, path: str) -> None:
+        """Remove a group directory and the path-hashed external
+        bucketed table readers may have registered over it (ADVICE r11:
+        a removed dir's catalog entry would otherwise outlive it for the
+        whole session).  Every purge and rewrite of such a dir goes
+        through here."""
+        import shutil
+
+        spark.sql(f"DROP TABLE IF EXISTS {Sink._forget_bucket_table(spark, path)}")
+        shutil.rmtree(path, ignore_errors=True)
+
+    @staticmethod
+    def _purge_superseded(spark, group_dir: str, leaves, epochs, keep: str) -> None:
+        """Drop each leaf's ``data/epoch=<e>`` dirs and every
+        ``compact/`` dir except ``keep`` (dead tmp, torn or superseded
+        consolidations) once a marker has published ``keep``."""
+        from pathlib import Path
+
+        for name in leaves:
+            for e in epochs:
+                Sink._drop_dir(spark, f"{group_dir}/{name}/data/epoch={e}")
+            cdir = Path(f"{group_dir}/{name}/compact")
+            if cdir.exists():
+                for p in cdir.iterdir():
+                    if p.name != keep:
+                        Sink._drop_dir(spark, str(p))
+
+    @staticmethod
     def _write_bucketed_dir(
         df: DataFrame, path: str, cols: "Sequence[str]", n: int
     ) -> None:
@@ -405,12 +433,9 @@ class Sink:
         aligns write tasks 1:1 with buckets (same murmur3-pmod hash),
         so an upstream 400-partition scan can't emit 400 near-empty
         files per bucket (sources.write_bucketed has the same note)."""
-        import shutil
-
         spark = df.sparkSession
-        tbl = Sink._forget_bucket_table(spark, path)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(path, ignore_errors=True)  # torn uncommitted rewrite
+        Sink._drop_dir(spark, path)  # torn uncommitted rewrite
+        tbl = Sink._bucket_table_name(path)
         (
             df.repartition(int(n), *[F.col(c) for c in cols])
             .write.mode("overwrite")
@@ -755,7 +780,6 @@ class Sink:
         than the compaction point may still repeat a key until the next
         compaction — readers must not rely on global uniqueness, only
         on the key SET being preserved, which this never changes."""
-        import shutil as _shutil
         import uuid as _uuid
         from pathlib import Path
 
@@ -809,25 +833,7 @@ class Sink:
             mtmp.write_text(new_dir)
             os.replace(mtmp, marker_dir / str(k))  # the group-wide switch point
         if gc:
-            def _drop_dir(path: str) -> None:
-                # ADVICE r11: readers register path-hashed external
-                # bucketed tables over these dirs; a gc'd dir's entry
-                # would otherwise outlive it for the whole session,
-                # accumulating one stale catalog row per compaction of
-                # a long-lived stream.  Recoverable by name, so drop.
-                spark.sql(
-                    f"DROP TABLE IF EXISTS {Sink._forget_bucket_table(spark, path)}"
-                )
-                _shutil.rmtree(path, ignore_errors=True)
-
-            for name in leaves:
-                for e in epochs:
-                    _drop_dir(f"{group_dir}/{name}/data/epoch={e}")
-                cdir = Path(f"{group_dir}/{name}/compact")
-                if cdir.exists():
-                    for p in cdir.iterdir():
-                        if p.name != new_dir:  # dead tmp/torn/superseded dirs
-                            _drop_dir(str(p))
+            Sink._purge_superseded(spark, group_dir, leaves, epochs, new_dir)
         return k
 
     @staticmethod
@@ -901,7 +907,6 @@ class Sink:
         marker names ONE directory, so every leaf must materialize it
         or post-publish reads of the untouched leaves resolve a
         nonexistent dir and fail)."""
-        import shutil as _shutil
         import uuid as _uuid
         from pathlib import Path
 
@@ -946,16 +951,7 @@ class Sink:
         mtmp.write_text(new_dir)
         os.replace(mtmp, marker_dir / str(k))
         if purge:
-            for name in all_leaves:
-                for e in epochs:
-                    _shutil.rmtree(
-                        f"{group_dir}/{name}/data/epoch={e}", ignore_errors=True
-                    )
-                cdir = Path(f"{group_dir}/{name}/compact")
-                if cdir.exists():
-                    for p in cdir.iterdir():
-                        if p.name != new_dir:
-                            _shutil.rmtree(p, ignore_errors=True)
+            Sink._purge_superseded(spark, group_dir, all_leaves, epochs, new_dir)
         return kept
 
     @staticmethod
@@ -1000,7 +996,6 @@ class Sink:
         group with additive schema evolution pass ``evolve_schema=True``
         — the default refuses to consolidate a schema-divergent leaf
         rather than silently dropping later epochs' columns."""
-        import shutil as _shutil
         import uuid as _uuid
         from pathlib import Path
 
@@ -1053,16 +1048,7 @@ class Sink:
         mtmp.write_text(new_dir)
         os.replace(mtmp, marker_dir / str(k))  # the atomic delete-visibility point
         if purge:
-            for name in all_leaves:
-                for e in epochs:
-                    _shutil.rmtree(
-                        f"{group_dir}/{name}/data/epoch={e}", ignore_errors=True
-                    )
-                cdir = Path(f"{group_dir}/{name}/compact")
-                if cdir.exists():
-                    for p in cdir.iterdir():
-                        if p.name != new_dir:
-                            _shutil.rmtree(p, ignore_errors=True)
+            Sink._purge_superseded(spark, group_dir, all_leaves, epochs, new_dir)
             for p in marker_dir.iterdir():
                 if p.name.startswith("."):
                     p.unlink(missing_ok=True)

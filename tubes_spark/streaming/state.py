@@ -3,8 +3,10 @@
 The reference's doc example (Tubes/Util.hs:158-172) folds 1..10 -> 55,
 then *resumes the same pump* with 11..20 -> 210.  In Spark the pump
 state is the streaming state store: a keyed accumulator updated per
-micro-batch via ``applyInPandasWithState``, persisted in the checkpoint
-so a restarted query resumes exactly where it stopped.
+micro-batch, persisted in the checkpoint so a restarted query resumes
+exactly where it stopped.  Associative folds keep that accumulator in
+the JVM (a native streaming aggregate); a generic ``step`` or watermark
+eviction keeps it in per-key Python via ``applyInPandasWithState``.
 """
 
 from __future__ import annotations
@@ -13,21 +15,51 @@ from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 
-# commutative-and-associative folds with a vectorized per-batch reduce:
+# commutative-and-associative folds with a vectorized per-batch reduce
 # (reduce the Arrow batch column in C, merge the scalar into the
-# accumulator).  The generic `step` loop stays for arbitrary
-# non-associative folds — the reference's pump accepts ANY step — but
-# the common cases should not pay a per-row Python loop.
+# accumulator) — the evicting Python path's form of `op`.  The generic
+# `step` loop stays for arbitrary non-associative folds — the
+# reference's pump accepts ANY step — but the common cases should not
+# pay a per-row Python loop.
 _VECTOR_OPS = {
     "sum": (lambda s: float(s.sum()), lambda acc, x: acc + x),
     "min": (lambda s: float(s.min()), lambda acc, x: min(acc, x)),
     "max": (lambda s: float(s.max()), lambda acc, x: max(acc, x)),
     "count": (lambda s: float(len(s)), lambda acc, x: acc + x),
 }
+
+# the same folds as native aggregates, ``init`` merged in at projection
+# time: the JVM keeps the partial-aggregate state, and sum/min/max skip
+# null values exactly as the pandas reduces skip NaN
+_NATIVE_OPS = {
+    "sum": lambda v, init: init + F.coalesce(F.sum(v), F.lit(0.0)),
+    "min": lambda v, init: F.least(init, F.min(v)),
+    "max": lambda v, init: F.greatest(init, F.max(v)),
+    "count": lambda v, init: init + F.count(F.lit(1)),
+}
+
+
+def _native_fold(df: DataFrame, key_cols: list[str], value_col: str,
+                 op: str, init: float, output_schema: str) -> DataFrame:
+    """``running_fold`` for an associative ``op`` without eviction: a
+    streaming ``groupBy().agg()`` whose update-mode rows are the Python
+    path's rows — one ``(key, acc, n)`` per key seen in the trigger,
+    keyed by the first key column as a string (a null key stays
+    null)."""
+    v = F.col(value_col).cast("double")
+    agg = df.groupBy(*key_cols).agg(
+        _NATIVE_OPS[op](v, F.lit(float(init))).alias("acc"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    key = F.col(key_cols[0]).cast("string") if key_cols else F.lit("")
+    out = agg.select(key.alias("key"), "acc", "n")
+    return out.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
+                        for f in StructType.fromDDL(output_schema).fields])
 
 
 def running_fold(
@@ -44,7 +76,8 @@ def running_fold(
     """Keyed resumable fold over an unbounded stream.
 
     Each key owns an ``(acc, n)`` state cell; every micro-batch applies
-    ``step`` over the batch's values and writes the new accumulator.
+    ``step`` (or ``op``) over the batch's values and writes the new
+    accumulator.
     With a checkpoint location, stop/restart resumes from the stored
     state — the reference's ``duplicate summer`` resumption
     (Tubes/Util.hs:167).
@@ -61,15 +94,30 @@ def running_fold(
     keys active within the eviction horizon.  Results for keys that
     never time out are identical to the NoTimeout run.
 
-    ``op`` selects a VECTORIZED per-batch reduce for the commutative
-    cases ('sum'/'min'/'max'/'count'): the Arrow batch column reduces
-    in C and only the scalar merges into the accumulator — no per-row
-    Python loop.  Identical results to the ``step`` loop whenever the
-    fold is associative over the batch's values (exact for the
-    integer-valued floats the oracle queries fold)."""
+    ``op`` names an associative fold ('sum'/'min'/'max'/'count').
+    Without eviction it runs as Spark's NATIVE streaming aggregate —
+    ``groupBy(*key_cols).agg(...)`` with its state in the JVM state
+    store (HDFS-backed or RocksDB), one shuffle on the key and no
+    Python worker — projected to the same ``(key, acc, n)`` rows with
+    ``init`` folded in (``init + sum``, ``least(init, min)``,
+    ``greatest(init, max)``, ``init + count``).  ``n`` counts every
+    row; sum/min/max skip null values.  With eviction the op runs as a
+    vectorized per-batch reduce inside the Python state function (the
+    Arrow batch column reduces in C, only the scalar merges into the
+    accumulator).  Either way the results equal the ``step`` loop's
+    whenever the fold is associative over the values (exact for the
+    integer-valued floats the oracle queries fold).  The two paths
+    keep different state schemas, so a checkpoint written by one
+    cannot be resumed by the other.  The key string matches the
+    Python path's ``str()`` for string and integer keys; a null key
+    stays null (the Python path writes ``str()`` of the pandas value:
+    ``'None'`` for strings, ``'nan'`` for numbers).  Only a generic
+    ``step`` or eviction keeps per-key Python state."""
     evict = event_time_col is not None and evict_gap_ms is not None
     if op is not None and op not in _VECTOR_OPS:
         raise ValueError(f"op must be one of {sorted(_VECTOR_OPS)}, got {op!r}")
+    if op is not None and not evict:
+        return _native_fold(df, key_cols, value_col, op, init, output_schema)
 
     def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         if evict and state.hasTimedOut:
